@@ -115,9 +115,14 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
 
+    from pyspark.sql import SparkSession
+
     from burst_db_spark.session import get_spark
 
-    spark = get_spark(app_name=f"burst_db_spark_{args.cmd}")
+    # a caller's running session is used as it is (get_spark would rename it)
+    spark = SparkSession.getActiveSession() or get_spark(
+        app_name=f"burst_db_spark_{args.cmd}"
+    )
 
     if args.cmd == "create":
         from burst_db_spark.plans import fixtures
@@ -189,9 +194,8 @@ def main(argv: list[str] | None = None) -> int:
         jpl_bridge = bridge.join(bursts, "burst_id").select(
             "frame_fid", F.col("burst_id_jpl").alias("burst_id")
         )
-        doc = catalog_document(catalog, jpl_bridge)
-        write_envelope(
-            doc,
+        n_frames = write_envelope(
+            catalog_document(catalog, jpl_bridge),
             args.out,
             "frame_fid",
             ["burst_id_list", "sensing_time_list"],
@@ -201,7 +205,7 @@ def main(argv: list[str] | None = None) -> int:
                 "db_path": args.db,
             },
         )
-        print(json.dumps({"out": args.out, "n_frames": doc.count()}))
+        print(json.dumps({"out": args.out, "n_frames": n_frames}))
         return 0
 
     if args.cmd == "make-reference-dates":
@@ -221,9 +225,9 @@ def main(argv: list[str] | None = None) -> int:
             acq,
             interval_days=args.interval_days,
             min_acquisitions=args.min_acquisitions,
-        ).orderBy("frame_fid", "ref_idx")
+        )
         data: dict[str, list[str]] = {}
-        for r in refs.collect():
+        for r in sorted(refs.collect(), key=lambda r: (r.frame_fid, r.ref_idx)):
             data.setdefault(str(r.frame_fid), []).append(
                 r.ref_date.isoformat()
             )
@@ -272,9 +276,9 @@ def main(argv: list[str] | None = None) -> int:
             )
         win = yearly_windows(
             seasons, first_year=args.first_year, last_year=args.last_year
-        ).orderBy("frame_fid", "start_ts")
+        )
         blackout_dates: dict[str, list[list[str]]] = {}
-        for r in win.collect():
+        for r in sorted(win.collect(), key=lambda r: (r.frame_fid, r.start_ts)):
             blackout_dates.setdefault(str(r.frame_fid), []).append(
                 [r.start_ts.isoformat(), r.end_ts.isoformat()]
             )

@@ -6,6 +6,7 @@
 - ``burst_catalog``   — EP2 `make-burst-catalog`: dedup → join → filter →
                         per-day min → blackout anti-join
 - ``reference_dates`` — W5 stateful per-frame reference-date selection
+                        (one array fold per frame, in the JVM)
 - ``blackout``        — yearly interval-window generation
 - ``query_frame``     — EP3 lookup / intersect interactive queries
 """

@@ -1,7 +1,11 @@
 """W5 — reference-date selection: a stateful per-key scan whose emission
 rule depends on how many references were already emitted
-(reference_dates.py:105-157) — NOT expressible as a fixed-frame window
-function, hence applyInPandas per frame (SURVEY.md §2.5 W5, §7.4.2).
+(reference_dates.py:105-157). It is not a fixed-frame window function,
+so it runs as one fold per key: each key's sorted sensing times are
+collected into an array and folded by a Spark ``aggregate`` higher-order
+function whose state is ``(refs array<bigint>, group int)``, then
+``posexplode``-ed back to rows (SURVEY.md §2.5 W5, §7.4.2). The whole
+scan stays in the JVM: no Python worker starts.
 
 Semantics (re-implemented from the reference's loop):
 - the first sensing time is always a reference;
@@ -12,19 +16,25 @@ Semantics (re-implemented from the reference's loop):
   reference; an event date without enough acquisitions *moves* the last
   reference to t instead (merge rule).
 
-Per-key state is one frame's sensing times (≤ a few hundred) — tiny;
-~47k frames parallelize across executors.
+Times are folded as epoch microseconds and days are epoch days
+(``floor(t / 1 day)``, so pre-1970 times floor like Python's ``//``);
+in a UTC session these are the calendar days :func:`select_reference_dates`
+sees. Per-key state is one frame's sensing times (≤ a few hundred) —
+tiny; ~47k frames parallelize across executors.
 """
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import date, datetime
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 INTERVAL_DAYS = int(1.0 * 365.25)
 MIN_ACQS = 15
+
+_DAY_US = 86_400_000_000
+_EPOCH = date(1970, 1, 1)
 
 
 def select_reference_dates(
@@ -59,109 +69,63 @@ def select_reference_dates(
     return refs
 
 
-_DAY_NS = 86_400_000_000_000
-_EPOCH_ORD = 719_163  # date(1970, 1, 1).toordinal()
+def _scan_expr(interval_days: int, min_acquisitions: int) -> str:
+    """The per-key state machine of :func:`select_reference_dates` as one
+    SQL expression over ``__ts`` (sorted epoch micros) and
+    ``__event_days`` (epoch days, or NULL); evaluates to the refs array."""
+    is_event = f"coalesce(array_contains(__event_days, floor(t / {_DAY_US})), false)"
+    return f"""
+    aggregate(
+        slice(__ts, 2, size(__ts)),
+        named_struct('refs', slice(__ts, 1, 1), 'group', 1),
+        (s, t) -> CASE
+            WHEN ((t - s.refs[0]) div {_DAY_US} >= size(s.refs) * {interval_days}
+                  OR {is_event})
+                 AND s.group + 1 >= {min_acquisitions}
+            THEN named_struct('refs', concat(s.refs, array(t)), 'group', 0)
+            WHEN {is_event}
+            THEN named_struct(
+                'refs', concat(slice(s.refs, 1, size(s.refs) - 1), array(t)),
+                'group', 0)
+            ELSE named_struct('refs', s.refs, 'group', s.group + 1)
+        END
+    ).refs
+    """
 
 
-def _select_reference_ns(
-    ts_ns: list[int],
-    event_days: set[int] | None,
-    interval_days: int,
-    min_acquisitions: int,
-) -> list[int]:
-    """Integer-nanosecond twin of :func:`select_reference_dates` — the
-    hot kernel. Works on SORTED epoch-ns ints: ``timedelta.days`` is
-    ``(t - ref0) // DAY_NS`` for the positive diffs here, and
-    ``t.date()`` is ``t // DAY_NS`` (naive post-1970 timestamps), so
-    the two are step-for-step identical (pytest pins equality on
-    randomized fixtures incl. intra-day times). Exists because building
-    100k ``datetime`` objects per task dominated the w5b wall — the
-    int loop is ~5x cheaper and the Arrow→numpy view is zero-copy."""
-    events = event_days or ()
-    refs: list[int] = []
-    group = 0
-    for t in ts_ns:
-        if not refs:
-            refs.append(t)
-            group = 1
-            continue
-        group += 1
-        interval_passed = (t - refs[0]) // _DAY_NS >= len(refs) * interval_days
-        is_event = (t // _DAY_NS) in events
-        if interval_passed or is_event:
-            if group >= min_acquisitions:
-                refs.append(t)
-                group = 0
-            elif is_event:
-                refs[-1] = t
-                group = 0
-    return refs
-
-
-def _refs_frame(key: str, k, refs_ns: list[int]) -> pd.DataFrame:
-    import numpy as np
-
-    return pd.DataFrame(
-        {
-            key: [k] * len(refs_ns),
-            "ref_idx": range(1, len(refs_ns) + 1),
-            "ref_date": np.asarray(refs_ns, dtype="int64").view("M8[ns]"),
-        }
-    )
-
-
-def _ts_ns_sorted(series: pd.Series) -> list[int]:
-    import numpy as np
-
-    vals = series.to_numpy(dtype="datetime64[ns]").astype("int64")
-    return np.sort(vals).tolist()
-
-
-def _grouped_refs_frames(
-    pdf: pd.DataFrame,
+def _scan(
+    acq: DataFrame,
+    event_days: DataFrame | None,
     key: str,
     ts_col: str,
-    events_for_key,
     interval_days: int,
     min_acquisitions: int,
-) -> pd.DataFrame:
-    """Run the per-key kernel over EVERY key in one pandas frame (a whole
-    task partition): one lexsort + numpy boundary split instead of one
-    Arrow round-trip per key. Optimization r14 (guide §4.5 — amortize
-    per-task, not per-group): ``groupBy(key).applyInPandas`` ships each
-    key as its own Arrow batch + Python call, which costs ~2 ms per
-    GROUP regardless of size — measured 3.3 s for a trivial kernel over
-    the 1500-key sf0.1 frame vs 0.2 s for the identical shuffle+agg.
-    ``events_for_key``: key -> set of epoch-day ints (or None)."""
-    import numpy as np
-
-    keys = pdf[key].to_numpy()
-    ts = pdf[ts_col].to_numpy(dtype="datetime64[ns]").astype("int64")
-    order = np.lexsort((ts, keys))
-    keys_s, ts_s = keys[order], ts[order]
-    bounds = np.nonzero(np.diff(keys_s))[0] + 1
-    starts = np.concatenate(([0], bounds))
-    ends = np.concatenate((bounds, [len(keys_s)]))
-    out_k: list[int] = []
-    out_i: list[int] = []
-    out_r: list[int] = []
-    for s, e in zip(starts, ends):
-        k = int(keys_s[s])
-        refs = _select_reference_ns(
-            ts_s[s:e].tolist(),
-            events_for_key(k),
-            interval_days,
-            min_acquisitions,
+    broadcast_events: bool,
+) -> DataFrame:
+    """(key, ref_idx, ref_date): one ``collect_list`` per key, the
+    per-key ``(key, __event_days)`` frame left-joined on (keys with events
+    but no acquisitions emit nothing), then the fold of
+    :func:`_scan_expr` and a ``posexplode``."""
+    per_key = acq.groupBy(key).agg(
+        F.array_sort(
+            F.collect_list(F.unix_micros(F.col(ts_col).cast("timestamp")))
+        ).alias("__ts")
+    )
+    if event_days is None:
+        per_key = per_key.withColumn(
+            "__event_days", F.lit(None).cast("array<bigint>")
         )
-        out_k.extend([k] * len(refs))
-        out_i.extend(range(1, len(refs) + 1))
-        out_r.extend(refs)
-    return pd.DataFrame(
-        {
-            key: np.asarray(out_k, dtype="int64"),
-            "ref_idx": np.asarray(out_i, dtype="int64"),
-            "ref_date": np.asarray(out_r, dtype="int64").view("M8[ns]"),
-        }
+    else:
+        side = F.broadcast(event_days) if broadcast_events else event_days
+        per_key = per_key.join(side, key, "left")
+    refs = F.expr(_scan_expr(interval_days, min_acquisitions))
+    return per_key.select(
+        F.col(key).cast("int").alias(key),
+        F.posexplode(refs).alias("pos", "__ref"),
+    ).select(
+        key,
+        (F.col("pos") + 1).cast("int").alias("ref_idx"),
+        F.timestamp_micros("__ref").alias("ref_date"),
     )
 
 
@@ -173,34 +137,31 @@ def reference_dates(
     interval_days: int = INTERVAL_DAYS,
     min_acquisitions: int = MIN_ACQS,
 ) -> DataFrame:
-    """(key, ref_idx, ref_date) — one row per emitted reference."""
-    events_map = {
-        int(k): {
-            datetime.strptime(d, "%Y-%m-%d").date().toordinal() - _EPOCH_ORD
-            for d in v
-        }
-        for k, v in (event_dates_by_key or {}).items()
-    }
+    """(key, ref_idx, ref_date) — one row per emitted reference.
 
-    def _per_partition(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        yield _grouped_refs_frames(
-            pdf, key, ts_col, lambda k: events_map.get(k),
-            interval_days, min_acquisitions,
+    ``event_dates_by_key`` mirrors the reference's small hand-curated
+    ``EVENT_DATES_BY_FRAME`` constant (reference_dates.py:110-112); it
+    becomes a broadcast ``(key, __event_days)`` frame."""
+    event_days = None
+    if event_dates_by_key:
+        rows = [
+            (
+                int(k),
+                sorted(
+                    {
+                        (datetime.strptime(d, "%Y-%m-%d").date() - _EPOCH).days
+                        for d in v
+                    }
+                ),
+            )
+            for k, v in event_dates_by_key.items()
+        ]
+        event_days = acq.sparkSession.createDataFrame(
+            rows, f"{key} int, __event_days array<bigint>"
         )
-
-    schema = f"{key} int, ref_idx int, ref_date timestamp"
-    n_parts = acq.sparkSession.sparkContext.defaultParallelism
-    # hash-repartition by key (every key complete within one task), then
-    # run the kernel once per PARTITION — same per-key state machine,
-    # same rows, ~no per-group Arrow overhead (see _grouped_refs_frames)
-    return (
-        acq.select(key, ts_col)
-        .repartition(n_parts, key)
-        .mapInPandas(_per_partition, schema)
+    return _scan(
+        acq, event_days, key, ts_col, interval_days, min_acquisitions,
+        broadcast_events=True,
     )
 
 
@@ -215,108 +176,26 @@ def reference_dates_cogrouped(
     broadcast_events: bool = False,
 ) -> DataFrame:
     """(key, ref_idx, ref_date) with per-key event dates as JOINABLE
-    STATE: ``events`` is a (key, event_date) DataFrame cogrouped with
-    the acquisitions, so event dates shuffle to the task that owns the
-    key. The dict-parameter path in :func:`reference_dates` mirrors the
-    reference's small hand-curated ``EVENT_DATES_BY_FRAME`` constant
-    (reference_dates.py:110-112) and stays for parity; the cogroup is
-    the generic 100 TB shape — a driver-collected dict is pickled into
-    every task and grows with the key count, a cogrouped DataFrame
-    does not.
+    STATE: ``events`` is a (key, event_date) DataFrame reduced to one
+    ``collect_set`` array of epoch days per key and joined to the
+    acquisitions' per-key arrays, so event dates travel to the task that
+    owns the key. The dict-parameter path in :func:`reference_dates`
+    stays for parity with the reference; this is the generic 100 TB
+    shape — a driver-built dict grows with the key count, a joined
+    DataFrame does not.
 
     ``broadcast_events=True`` (VERDICT r11 #3): when the caller KNOWS
     the events side is broadcast-sized (e.g. a per-key aggregate of a
-    dimension, bounded by key count × a small constant), skip the second
-    groupBy + cogroup machinery entirely — collect the per-key event
-    dates into one array row per key, broadcast-left-join that onto the
-    acquisitions, and run a single ``groupBy(key).applyInPandas`` with
-    the dates carried as a column. Same oracle hash, one shuffle instead
-    of two grouped exchanges. The events frame is still never collected
-    to the driver — the broadcast is Spark's, sized by the JOIN side,
-    not a dict pickled into every task closure."""
-    if broadcast_events:
-        import pyspark.sql.functions as F
-
-        ev_arr = (
-            events.select(key, event_date_col)
-            .groupBy(key)
-            .agg(
-                F.collect_set(
-                    F.col(event_date_col).cast("date")
-                ).alias("__event_dates")
-            )
-        )
-        joined = acq.select(key, ts_col).join(F.broadcast(ev_arr), key, "left")
-
-        def _per_partition_bcast(batches):
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            pdf = (
-                pd.concat(pdfs, ignore_index=True)
-                if len(pdfs) > 1
-                else pdfs[0]
-            )
-            ev_map: dict = {}
-            kk = pdf[key].to_numpy()
-            dates_col = pdf["__event_dates"].to_numpy()
-            for i in range(len(kk)):
-                k = int(kk[i])
-                if k not in ev_map:
-                    dates = dates_col[i]
-                    ev_map[k] = (
-                        {d.toordinal() - _EPOCH_ORD for d in dates}
-                        if dates is not None and len(dates)
-                        else None
-                    )
-            yield _grouped_refs_frames(
-                pdf, key, ts_col, ev_map.get,
-                interval_days, min_acquisitions,
-            )
-
-        schema = f"{key} int, ref_idx int, ref_date timestamp"
-        n_parts = acq.sparkSession.sparkContext.defaultParallelism
-        # whole-partition kernel, not per-group (guide §4.5; see
-        # _grouped_refs_frames — same rows, no per-group Arrow cost)
-        return (
-            joined.repartition(n_parts, key)
-            .mapInPandas(_per_partition_bcast, schema)
-        )
-
-    def _per_key(acq_pdf: pd.DataFrame, ev_pdf: pd.DataFrame) -> pd.DataFrame:
-        if acq_pdf.empty:
-            # key present only in events: no acquisitions, no references
-            # (typed empty Series — a bare [] is float64 and Arrow can't
-            # cast double → timestamp)
-            return pd.DataFrame(
-                {
-                    key: pd.Series([], dtype="int64"),
-                    "ref_idx": pd.Series([], dtype="int64"),
-                    "ref_date": pd.Series([], dtype="datetime64[ns]"),
-                }
-            )
-        k = acq_pdf[key].iloc[0]
-        ev = (
-            set(
-                (
-                    pd.to_datetime(ev_pdf[event_date_col])
-                    .to_numpy(dtype="datetime64[ns]")
-                    .astype("int64")
-                    // _DAY_NS
-                ).tolist()
-            )
-            if len(ev_pdf)
-            else None
-        )
-        refs = _select_reference_ns(
-            _ts_ns_sorted(acq_pdf[ts_col]), ev, interval_days, min_acquisitions
-        )
-        return _refs_frame(key, k, refs)
-
-    schema = f"{key} int, ref_idx int, ref_date timestamp"
-    return (
-        acq.select(key, ts_col)
-        .groupBy(key)
-        .cogroup(events.select(key, event_date_col).groupBy(key))
-        .applyInPandas(_per_key, schema)
+    dimension, bounded by key count × a small constant), the per-key
+    event arrays are broadcast-joined instead of shuffled. The events
+    frame is still never collected to the driver — the broadcast is
+    Spark's, sized by the JOIN side."""
+    event_days = events.groupBy(key).agg(
+        F.collect_set(
+            F.unix_date(F.col(event_date_col).cast("date")).cast("bigint")
+        ).alias("__event_days")
+    )
+    return _scan(
+        acq, event_days, key, ts_col, interval_days, min_acquisitions,
+        broadcast_events,
     )

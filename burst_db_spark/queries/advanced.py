@@ -2,9 +2,10 @@
 ORACLES round by round:
 
 - w5_reference_dates: stateful scan whose emission rule depends on prior
-  emissions (reference_dates.py:105-157) → applyInPandas; since r10 the
-  state machine is replayed by a DuckDB recursive CTE, so the row set is
-  hash-checked, not just counted.
+  emissions (reference_dates.py:105-157) → one ``aggregate`` fold over
+  each key's sorted times, in the JVM; since r10 the state machine is
+  replayed by a DuckDB recursive CTE, so the row set is hash-checked,
+  not just counted.
 - mm_features: multimodal binary plumbing; the deterministic md5 stub
   features are reproduced byte-exactly in SQL.
 (stream_session_counts and stream_daily_counts were never rows-only:
@@ -74,7 +75,7 @@ _W5_ORACLE = """
 @register(
     "w5_reference_dates",
     oracle=_W5_ORACLE,
-    tags=("W5", "applyInPandas", "derived-oracle", "recursive-cte"),
+    tags=("W5", "array-fold", "derived-oracle", "recursive-cte"),
 )
 def w5_reference_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-date selection per user over the events stream (7-day

@@ -438,7 +438,7 @@ _W5B_ORACLE = f"""
 @register(
     "w5b_reference_dates_events",
     oracle=_W5B_ORACLE,
-    tags=("W5", "applyInPandas", "derived-oracle", "recursive-cte",
+    tags=("W5", "array-fold", "derived-oracle", "recursive-cte",
           "event-dates"),
 )
 def w5b_reference_dates_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,9 +449,10 @@ def w5b_reference_dates_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE replay that reduces the overwrite to last-change-wins
     per (frame, ref_idx). Event dates arrive as a DataFrame — never a
     driver-collected dict pickled into every task: broadcast-joined as a
-    per-key array here (the events side is a bounded per-key aggregate),
-    with the cogroup path of reference_dates_cogrouped retained for
-    unbounded event sets."""
+    per-key array here (the events side is a bounded per-key aggregate;
+    the shuffled join of reference_dates_cogrouped is kept for unbounded
+    event sets), and the scan is one JVM fold per frame, no Python
+    worker."""
     from burst_db_spark.plans.reference_dates import reference_dates_cogrouped
 
     ev = load(spark, sf_dir, "events").select(

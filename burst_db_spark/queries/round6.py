@@ -656,11 +656,15 @@ def knn_ivf_learned_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f_recursive_cte_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4's RECURSIVE CTE surface (WITH RECURSIVE ... UNION ALL —
     resolved by Catalyst's ResolveWithCTE into an iterative union
-    execution): a calendar day spine grown one row per recursion step
-    from min(ts) to max(ts), left-joined to daily counts so silent
-    gap days surface as zero rows. The DuckDB oracle runs the SAME
-    recursive SQL (both dialects support linear UNION ALL recursion),
-    making this a surface-parity row, not just a result check. The
+    execution): a calendar day spine over [min(ts), max(ts)] grown by
+    heap-index recursion — each step emits children 2i+1 and 2i+2 of
+    every index in the working set, so the N+1 day offsets arrive in
+    about log2(N+1) steps — left-joined to daily counts so silent gap
+    days surface as zero rows. On empty input the spine is one NULL
+    row and no recursive CTE runs. The DuckDB oracle runs the original
+    one-day-per-step recursion (both dialects support linear UNION ALL
+    recursion) and yields the same day set, so the two recursive shapes
+    are checked against each other, not just a result. The
     production gap-fill shape remains sequence()+explode
     (w12_linear_interpolation) — one generate, no iterative plan; this
     row exists to pin the recursion feature itself, the SQL analog of

@@ -6,9 +6,12 @@ create_cslc_burst_catalog.py:313-334, utils.py:11-24 zipped variant).
 
 Spark-first shape: the DATA lives long-form in DataFrames; the envelope
 is an export format. ``write_envelope`` builds the nested doc with
-aggregations (collect per key → map) and writes ONE small artifact —
-appropriate because these documents are bounded (47k frames × small
-lists). ``read_envelope`` explodes a document back to long form.
+aggregations (collect per key → map), brings it to the driver with ONE
+``collect`` (a single plan run; the document is held whole anyway), writes
+ONE small artifact and returns its key count, so callers need no second
+action to report it — appropriate because these documents are bounded
+(47k frames × small lists). ``read_envelope`` explodes a document back to
+long form.
 """
 
 from __future__ import annotations
@@ -37,6 +40,24 @@ def nested_doc_df(df: DataFrame, key: str, list_cols: Sequence[str]) -> DataFram
     return df.groupBy(key).agg(*aggs)
 
 
+def _envelope(
+    df: DataFrame,
+    key: str,
+    list_cols: Sequence[str],
+    metadata: dict | None,
+) -> dict:
+    nested = nested_doc_df(df, key, list_cols)
+    data = {
+        str(row[key]): {c: list(row[c]) for c in list_cols}
+        for row in nested.collect()
+    }
+    meta = {
+        "generation_time": datetime.now(timezone.utc).isoformat(),
+        **(metadata or {}),
+    }
+    return {"metadata": meta, "data": data}
+
+
 def envelope_json(
     df: DataFrame,
     key: str,
@@ -48,16 +69,7 @@ def envelope_json(
     The per-key aggregation is distributed; only the final bounded
     document is assembled driver-side (it is by definition a single
     artifact — same as the reference writing one JSON file)."""
-    nested = nested_doc_df(df, key, list_cols)
-    data = {
-        str(row[key]): {c: list(row[c]) for c in list_cols}
-        for row in nested.toLocalIterator()
-    }
-    meta = {
-        "generation_time": datetime.now(timezone.utc).isoformat(),
-        **(metadata or {}),
-    }
-    return json.dumps({"metadata": meta, "data": data}, sort_keys=True)
+    return json.dumps(_envelope(df, key, list_cols, metadata), sort_keys=True)
 
 
 def write_envelope(
@@ -66,10 +78,11 @@ def write_envelope(
     key: str,
     list_cols: Sequence[str],
     metadata: dict | None = None,
-) -> None:
+) -> int:
     """K3: write the envelope; ``.gz`` / ``.zip`` suffix → compressed
-    (utils.py:18-24 zips with level 6)."""
-    text = envelope_json(df, key, list_cols, metadata)
+    (utils.py:18-24 zips with level 6). Returns the number of keys."""
+    doc = _envelope(df, key, list_cols, metadata)
+    text = json.dumps(doc, sort_keys=True)
     if path.endswith(".gz"):
         with gzip.open(path, "wt") as f:
             f.write(text)
@@ -80,6 +93,7 @@ def write_envelope(
     else:
         with open(path, "w") as f:
             f.write(text)
+    return len(doc["data"])
 
 
 def read_envelope(

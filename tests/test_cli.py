@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import hashlib
 import json
 
 from burst_db_spark.__main__ import main
+
+
+def _sha(section) -> str:
+    return hashlib.sha256(json.dumps(section).encode()).hexdigest()
 
 
 def test_cli_create_lookup_intersect(spark, tmp_path, capsys):
@@ -30,10 +35,14 @@ def test_cli_create_lookup_intersect(spark, tmp_path, capsys):
 def test_cli_full_artifact_workflow(spark, tmp_path, capsys, monkeypatch):
     """create -> create-blackout -> make-burst-catalog -> make-reference-
     dates -> urls-for-frame: every artifact carries the reference's
-    envelope shape ({metadata, data} / {metadata, blackout_dates})."""
+    envelope shape ({metadata, data} / {metadata, blackout_dates}), the
+    documents' sections match the sha256 recorded before the steps ran
+    each plan once and scanned reference dates in the JVM, and the
+    caller's session conf is left as it was."""
     import gzip
 
     monkeypatch.setenv("BDS_GENERATION_TIME", "2026-01-01T00:00:00")
+    conf_before = spark.conf.getAll
     db = str(tmp_path / "db")
     assert main(["create", "--out", db, "--n-triplets", "120", "--n-tracks", "2"]) == 0
     capsys.readouterr()
@@ -49,6 +58,9 @@ def test_cli_full_artifact_workflow(spark, tmp_path, capsys, monkeypatch):
     some = next(iter(bdoc["blackout_dates"].values()))
     assert len(some) == 3  # one window per year
     assert all(len(w) == 2 and w[0] < w[1] for w in some)
+    assert _sha(bdoc["blackout_dates"]) == (
+        "b79afca616b4fb91b58f2b5db1695321e6065c4d6b44a3b0e13b8a4d873c0296"
+    )
 
     # burst catalog (with the blackout applied)
     cat = str(tmp_path / "catalog.json")
@@ -58,6 +70,10 @@ def test_cli_full_artifact_workflow(spark, tmp_path, capsys, monkeypatch):
     assert created["n_frames"] > 0
     cdoc = json.loads(open(cat).read())
     assert set(cdoc) == {"metadata", "data"}
+    assert created["n_frames"] == len(cdoc["data"])
+    assert _sha(cdoc["data"]) == (
+        "689841720ea0bd1f858b26cb61c5b0c5ed1fd7fd5f408903c29d9cf176e67ae3"
+    )
     fid, fd = next(iter(cdoc["data"].items()))
     assert set(fd) == {"burst_id_list", "sensing_time_list"}
     assert fd["burst_id_list"] == sorted(fd["burst_id_list"])
@@ -85,6 +101,9 @@ def test_cli_full_artifact_workflow(spark, tmp_path, capsys, monkeypatch):
     assert rdoc["metadata"]["interval"] == 60
     refs = next(iter(rdoc["data"].values()))
     assert refs == sorted(refs) and len(refs) >= 1
+    assert _sha(rdoc["data"]) == (
+        "322601f754a41dffab30b0d4c2780c0dd269940d5b78aae9b8df31aebd3162a7"
+    )
 
     # urls-for-frame: expected granules = bursts x dates
     assert main(["urls-for-frame", fid, "--json-file", cat]) == 0
@@ -100,6 +119,7 @@ def test_cli_full_artifact_workflow(spark, tmp_path, capsys, monkeypatch):
                  "--n-dates", "30", "--blackout", bj]) == 0
     capsys.readouterr()
     assert open(cat).read() == open(cat3).read()
+    assert spark.conf.getAll == conf_before
 
 
 def test_cli_historical_fetch(spark, tmp_path, capsys):

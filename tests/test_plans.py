@@ -178,22 +178,38 @@ def test_refdates_cogrouped_matches_dict_path(spark):
     assert not any(k == 9 for k, _, _ in got)  # events-only key emits nothing
 
 
-def test_refdates_ns_kernel_equals_datetime_reference():
-    """The integer-ns hot kernel must be step-for-step identical to the
-    pure-datetime reference implementation on randomized fixtures with
-    INTRA-DAY times (the floor-division day-diff and the t.date()
-    membership are the two places a naive rewrite could diverge)."""
+def _jvm_refs(spark, series, interval, min_acq):
+    """Run the JVM scan over ``series`` — {key: (times, event dates)} —
+    and return {key: [ref datetimes]} in ref_idx order."""
+    acq = spark.createDataFrame(
+        [(k, t) for k, (times, _) in series.items() for t in times],
+        "frame_fid int, sensing_time timestamp",
+    )
+    ev_map = {
+        k: [d.isoformat() for d in events]
+        for k, (_, events) in series.items()
+        if events
+    }
+    rows = reference_dates(
+        acq, event_dates_by_key=ev_map, interval_days=interval,
+        min_acquisitions=min_acq,
+    ).collect()
+    got: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: (r["frame_fid"], r["ref_idx"])):
+        got.setdefault(r["frame_fid"], []).append(r["ref_date"])
+    return got
+
+
+def test_refdates_jvm_scan_equals_datetime_reference(spark):
+    """The JVM fold must be step-for-step identical to the pure-datetime
+    reference implementation on randomized fixtures with INTRA-DAY times
+    (the floor-division day-diff and the t.date() membership are the two
+    places a rewrite over epoch micros could diverge)."""
     import random
     from datetime import timedelta
 
-    from burst_db_spark.plans.reference_dates import (
-        _DAY_NS,
-        _EPOCH_ORD,
-        _select_reference_ns,
-        select_reference_dates,
-    )
-
     rng = random.Random(0xA11CE)
+    trials: dict[tuple[int, int], dict[int, tuple]] = {}
     for trial in range(50):
         n = rng.randint(2, 80)
         t = datetime(2016, 7, 1) + timedelta(hours=rng.randint(0, 23))
@@ -210,21 +226,54 @@ def test_refdates_ns_kernel_equals_datetime_reference():
         } or None
         interval = rng.choice([60, 120, 365])
         min_acq = rng.choice([2, 5, 15])
-        want = select_reference_dates(times, events, interval, min_acq)
-        ts_ns = sorted(
-            int((x - datetime(1970, 1, 1)).total_seconds() * 1_000_000_000)
-            for x in times
-        )
-        ev_days = (
-            {d.toordinal() - _EPOCH_ORD for d in events} if events else None
-        )
-        got_ns = _select_reference_ns(ts_ns, ev_days, interval, min_acq)
-        got = [
-            datetime(1970, 1, 1) + timedelta(microseconds=x // 1000)
-            for x in got_ns
-        ]
-        assert got == want, f"trial {trial}"
-        assert all(x % _DAY_NS >= 0 for x in got_ns)
+        trials.setdefault((interval, min_acq), {})[trial] = (times, events)
+    for (interval, min_acq), series in trials.items():
+        got = _jvm_refs(spark, series, interval, min_acq)
+        for trial, (times, events) in series.items():
+            want = select_reference_dates(times, events, interval, min_acq)
+            assert got[trial] == want, f"trial {trial}"
+
+
+def test_refdates_jvm_scan_floor_day_edges(spark):
+    """Days floor, never truncate: a time at exactly midnight belongs to
+    that day and one a microsecond earlier to the day before; an interval
+    that elapses at exactly N days counts; before 1970 a time still
+    belongs to its own calendar day (truncation would move it to the
+    next one)."""
+    from datetime import date, timedelta
+
+    us = timedelta(microseconds=1)
+    t0 = datetime(2016, 7, 1, 6)
+    boundary = [
+        t0,
+        datetime(2016, 7, 4) - us,  # last instant of Jul 3: not an event
+        datetime(2016, 7, 4),  # first instant of the Jul 4 event
+        t0 + timedelta(days=10) - us,  # interval not yet elapsed
+        t0 + timedelta(days=10),  # exactly 10 days: elapsed
+        t0 + timedelta(days=12),
+    ]
+    pre_epoch = [
+        datetime(1969, 12, 30, 12),
+        datetime(1969, 12, 31, 6),  # day -1 (truncation gives day 0)
+        datetime(1970, 1, 1, 6),
+        datetime(1970, 1, 2, 6),
+    ]
+    series = {
+        1: (boundary, {date(2016, 7, 4)}),
+        2: (boundary, None),
+        3: (pre_epoch, {date(1969, 12, 31)}),
+        4: (pre_epoch, {date(1970, 1, 1)}),
+    }
+    got = _jvm_refs(spark, series, interval=10, min_acq=2)
+    for key, (times, events) in series.items():
+        assert got[key] == select_reference_dates(times, events, 10, 2), key
+    # the edges really were exercised: midnight is on the event day and a
+    # microsecond before is not, the exact-interval time is a reference,
+    # and 06:00 on 1969-12-31 is on that day, not on 1970-01-01
+    assert got[1] == [t0, datetime(2016, 7, 4)]
+    assert got[2] == [t0, t0 + timedelta(days=10)]
+    assert got[3] == [pre_epoch[0], datetime(1969, 12, 31, 6)]
+    assert got[4] == [pre_epoch[0], datetime(1970, 1, 1, 6)]
 
 
 def test_refdates_three_paths_agree_randomized(spark):

@@ -1,6 +1,6 @@
 """applyInPandasWithState: incremental reference-date selection must
-match the batch applyInPandas result when fed the same data in
-micro-batches (in order)."""
+match the batch result when fed the same data in micro-batches (in
+order)."""
 
 from __future__ import annotations
 
